@@ -3645,6 +3645,10 @@ WITH r AS (
   FROM keyed
 ), cbsv AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+  -- the operator's dropped-rows contract: NULL vectors, wrong lengths
+  -- and NULL elements never reach a cell (list_count skips NULLs)
+  WHERE embedding IS NOT NULL AND len(embedding) = {len(_CBS_CENTERS[0])}
+    AND list_count(embedding) = len(embedding)
 ), cbsk AS (
   SELECT * FROM (VALUES {_cbs_centers_values()}) AS t(cell, ctr)
 ), cbsd AS (

@@ -533,8 +533,8 @@ def assign_cells(
     reaches the same cell (the ANN oracles' round-before-rank rule).
     Appends an int ``cell`` column.
 
-    Contract: rows whose vector is NULL or whose length differs from
-    the centers' dimension are DROPPED (Spark's ``zip_with`` would
+    Contract: rows whose vector is NULL, holds a NULL element, or whose
+    length differs from the centers' dimension are DROPPED (Spark's ``zip_with`` would
     null-pad them into a ``cell = NULL`` group that no independent
     engine reproduces; silently wrong beats loudly absent here because
     the id column names the dropped rows for any caller that cares).
@@ -559,7 +559,9 @@ def assign_cells(
     if any(len(c) != dim for c in centers):
         raise ValueError("assign_cells: centers must share one dimension")
     df = df.where(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == F.lit(dim))
+        F.col(vec_col).isNotNull()
+        & (F.size(F.col(vec_col)) == F.lit(dim))
+        & ~F.exists(F.col(vec_col), lambda x: x.isNull())
     )
 
     def _d2(center) -> Column:

@@ -25,6 +25,7 @@ routes receiving an unconditional copy.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -210,15 +211,10 @@ class FanoutRouter:
         metrics = obs.get
         n = int(metrics["__total"])
         counts = {r.name: int(metrics[r.name]) for r in self.routes}
-        import json, os, time
-
-        os.makedirs(sink.commits_dir, exist_ok=True)
-        tmp = sink._marker(epoch_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"epoch": epoch_id, "rows": n, "per_sink": counts, "ts": time.time()}, f
-            )
-        os.rename(tmp, sink._marker(epoch_id))
+        sink.commit(
+            epoch_id,
+            {"epoch": epoch_id, "rows": n, "per_sink": counts, "ts": time.time()},
+        )
         return n
 
     def read_sink(self, spark: SparkSession, sink: IdempotentParquetSink, name: str) -> DataFrame:

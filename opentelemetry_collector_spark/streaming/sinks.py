@@ -138,15 +138,21 @@ class IdempotentParquetSink:
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
         writer.parquet(epoch_dir)
         n = int(obs.get["rows"])
-        os.makedirs(self.commits_dir, exist_ok=True)
         meta = {"epoch": epoch_id, "rows": n, "ts": time.time(), "sink": self.name}
         if extra_meta:
             meta.update(extra_meta)
+        self.commit(epoch_id, meta)
+        return n
+
+    def commit(self, epoch_id: int, meta: dict) -> None:
+        """Publish the epoch's commit marker: write ``meta`` to a tmp file,
+        then rename it into place (atomic), so a reader sees the whole
+        marker or none. Call only after the epoch's data is written."""
+        os.makedirs(self.commits_dir, exist_ok=True)
         tmp = self._marker(epoch_id) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(meta, f)
-        os.rename(tmp, self._marker(epoch_id))  # atomic publish
-        return n
+        os.rename(tmp, self._marker(epoch_id))
 
     def write_batch(self, df: DataFrame) -> int:
         """One-shot batch write (epoch 0)."""

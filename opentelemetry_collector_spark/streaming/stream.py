@@ -1,5 +1,20 @@
 """Structured Streaming mode — the push data path as micro-batches.
 
+A streaming pipeline runs the same ``PipelinePlan`` as the batch runner
+(plans/compiler.py): ``compile_pipeline`` reads the config once, and each
+``foreachBatch`` micro-batch is one ``run_epoch`` over the receiver's raw
+rows — the stages in config order (parse included), the routes, the
+cardinality limit, the write, exporter ``sent``, lineage and per-stage
+counters harvested per epoch. A pages-fed pipeline that declares no
+``parse`` gets the sql one at compile time, in both modes.
+
+One difference between the modes remains, the sink layout: the batch
+runner writes one partitioned epoch per pipeline (``<pipeline>/data/
+epoch=<id>/sink=<route>``), a stream one epoch per route
+(``<route>/data/epoch=<id>``), each under its own commit markers. Both
+layouts are read by existing tools, so unifying them is a data-format
+change of its own.
+
 The reference's hot path is a synchronous consumer chain fed by receivers,
 with two async boundaries: the batch processor's channel
 (processor/batchprocessor/batch_processor.go:196-200) and the export queue
@@ -24,16 +39,21 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from typing import Callable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.parse import parse_pages
+from ..plans.compiler import PipelinePlan, compile_pipeline, parse_stage, run_epoch
+from ..plans.config import ConfigError
 from ..schemas import PAGES_SCHEMA
 from .router import SINKS_COL, FanoutRouter, Route
 from .sinks import IdempotentParquetSink
-from .telemetry import write_lineage
+from .telemetry import PipelineTelemetry
+
+# run_epoch (plans/compiler.py) writes the lineage now; the name stays
+# importable here because the benchmark's tracer wraps it in this module
+from .telemetry import write_lineage  # noqa: F401
 
 
 def stream_pages(
@@ -46,127 +66,51 @@ def stream_pages(
     return reader.parquet(input_dir)
 
 
-def _build_stream_receiver(spark: SparkSession, kind: str, opts: dict) -> DataFrame:
-    """Streaming receiver factory — the streaming twin of the batch
-    ``_build_receiver`` (plans/compiler.py): the reference's graph builds
-    receivers identically in both modes (service/graph.go:59-102), so the
-    config's receiver section, not the caller, names the source."""
-    from ..plans.config import ConfigError
-
-    if kind in ("pages_parquet", "pages_stream"):
-        if not opts.get("path"):
-            raise ConfigError(f"streaming receiver {kind!r} needs a path")
-        return stream_pages(spark, opts["path"], opts.get("max_files_per_trigger"))
-    raise ConfigError(f"unknown streaming receiver kind {kind!r}")
-
-
 @dataclass
 class StreamingPipeline:
-    """readStream → parse → route → per-sink idempotent writes.
+    """readStream → ``run_epoch`` per micro-batch → per-route idempotent
+    writes.
 
     One ``foreachBatch`` per micro-batch: the routed frame is computed
-    once, then written to each sink's epoch directory keyed by the
+    once, then written to each route's epoch directory keyed by the
     micro-batch id. A replayed micro-batch (crash between sink commit and
     checkpoint commit) hits already-committed epochs and is skipped —
     exactly-once end to end.
+
+    Built by ``from_config``, or in code from ``routes`` alone: a pages
+    stream, the sql parse, those routes.
     """
 
     routes: Sequence[Route]
     out_root: str
-    transform: Callable[[DataFrame], DataFrame] | None = None
     lineage_dir: str | None = None
-    run_id: str = "stream"
-    epochs_seen: list[int] = field(default_factory=list)
-    # config-built source stream (S1): populated by from_config so the
-    # caller doesn't have to inject pages_stream by hand
+    plan: PipelinePlan | None = None
+    # the config-built source stream (S1); start() reads it when the
+    # caller passes none
     source: DataFrame | None = None
-    # per-write output-batch cap (send_batch_max_size) — from_config
-    # captures it from the pipeline's batch processor so the STREAMING
-    # write path honors it too, not just the batch runner
-    max_records_per_file: int | None = None
-    # metadata_keys layout + exporter compression (from_config): the
-    # STREAMING write honors the same per-write contracts as the batch
-    # runner — partitionBy(*keys) per epoch, per-write parquet codec
-    partition_keys: list | None = None
-    # the batch runner errors past this many metadata-key combinations
-    # (config.go:51-56); the streaming epoch enforces the SAME cap —
-    # a high-cardinality key would otherwise silently write unbounded
-    # partition directories per epoch instead of failing
-    metadata_cardinality_limit: int | None = None
-    compression: str | None = None
-    # parse engine from the pipeline's parse processor (from_config) —
-    # start() falls back to this when the caller doesn't pass one
-    parse_engine: str = "sql"
-    # config-declarable cross-micro-batch dedup (processor kind "dedup"):
-    # runs FIRST in process_batch — it is epoch-aware (snapshot state),
-    # so it cannot live in the stateless transform chain
-    deduper: object | None = None
-    # every N committed epochs, merge the dedup snapshot slices below
-    # the current epoch into one artifact (StreamingDeduper.compact) —
-    # keeps per-batch state reads bounded over long-running streams
-    dedup_compact_every: int | None = None
+    epochs_seen: list[int] = field(default_factory=list)
 
     def __post_init__(self) -> None:
-        self.router = FanoutRouter(list(self.routes))
+        if self.plan is None:
+            self.plan = PipelinePlan("stream", [parse_stage()], FanoutRouter(list(self.routes)))
+        self.telemetry = PipelineTelemetry()
         self.sinks = {
             r.name: IdempotentParquetSink(os.path.join(self.out_root, r.name), name=r.name)
-            for r in self.routes
+            for r in self.plan.router.routes
         }
 
-    def process_batch(self, records: DataFrame, epoch_id: int) -> None:
-        deduped = None
-        if self.deduper is not None:
-            records = deduped = self.deduper.dedupe_batch_rows(records, epoch_id)
-        if self.transform is not None:
-            records = self.transform(records)
-        assigned = self.router.assign(records).persist()
-        try:
-            if self.partition_keys and self.metadata_cardinality_limit:
-                # one bounded count-distinct on the already-persisted
-                # frame, same as the batch runner's enforcement
-                n_combos = assigned.select(
-                    F.count_distinct(F.struct(*self.partition_keys)).alias("n")
-                ).collect()[0]["n"]
-                if n_combos > self.metadata_cardinality_limit:
-                    from ..plans.config import ConfigError
+    def _write(self, assigned: DataFrame, epoch_id: int) -> dict[str, int]:
+        for name, sink in self.sinks.items():
+            subset = assigned.where(F.array_contains(F.col(SINKS_COL), name)).drop(SINKS_COL)
+            sink.write_epoch(subset, epoch_id, **self.plan.write_options)
+        return {name: sink.epoch_meta(epoch_id)["rows"] for name, sink in self.sinks.items()}
 
-                    raise ConfigError(
-                        f"batch metadata_keys {self.partition_keys}: "
-                        f"{n_combos} metadata-value combinations exceed "
-                        "metadata_cardinality_limit="
-                        f"{self.metadata_cardinality_limit}"
-                    )
-            for name, sink in self.sinks.items():
-                subset = assigned.where(
-                    F.array_contains(F.col(SINKS_COL), name)
-                ).drop(SINKS_COL)
-                sink.write_epoch(
-                    subset,
-                    epoch_id,
-                    max_records_per_file=self.max_records_per_file,
-                    partition_keys=self.partition_keys,
-                    compression=self.compression,
-                )
-            if self.lineage_dir is not None:
-                # epoch-keyed overwrite — replayed micro-batches re-land
-                # identical lineage rows instead of duplicating them
-                write_lineage(assigned, self.lineage_dir, self.run_id, epoch_id)
-            self.epochs_seen.append(int(epoch_id))
-            if (
-                self.deduper is not None
-                and self.dedup_compact_every
-                and int(epoch_id) > 0
-                and int(epoch_id) % self.dedup_compact_every == 0
-                and hasattr(self.deduper, "compact")
-            ):
-                # everything below THIS epoch is final (this epoch's own
-                # slice is the newest committed → never absorbed); a
-                # replayed epoch re-runs compact() idempotently
-                self.deduper.compact(records.sparkSession, int(epoch_id) - 1)
-        finally:
-            assigned.unpersist()
-            if deduped is not None:
-                deduped.unpersist()
+    def process_batch(self, records: DataFrame, epoch_id: int) -> None:
+        """One micro-batch of the source's rows as one epoch of the plan."""
+        run_epoch(
+            self.plan, records, int(epoch_id), self._write, self.telemetry, self.lineage_dir
+        )
+        self.epochs_seen.append(int(epoch_id))
 
     def start(
         self,
@@ -174,7 +118,6 @@ class StreamingPipeline:
         checkpoint_dir: str = None,
         available_now: bool = True,
         processing_time: str | None = None,
-        parse_engine: str | None = None,
     ):
         """Start the micro-batch loop.
 
@@ -194,8 +137,7 @@ class StreamingPipeline:
                 "no source: pass pages_stream or build via from_config with a "
                 "receiver path"
             )
-        records = parse_pages(pages_stream, engine=parse_engine or self.parse_engine)
-        writer = records.writeStream.foreachBatch(
+        writer = pages_stream.writeStream.foreachBatch(
             lambda df, eid: self.process_batch(df, eid)
         ).outputMode("update")
         if checkpoint_dir is not None:
@@ -221,150 +163,33 @@ class StreamingPipeline:
         restart; state survives in the checkpoint + idempotent sinks, so
         the rebuilt pipeline resumes exactly-once). The RECEIVER section
         builds the stream source (graph.go:59-102 builds receivers
-        identically in both modes); processors other than ``parse`` become
-        the transform chain; exporters become routes.
+        identically in both modes); ``compile_pipeline`` builds the rest.
         """
-        from ..plans.compiler import _build_processor
-
-        p = config.pipelines[pipeline]
-        write_cap = None
-        md_keys: list[str] = []
-        md_limit: int | None = None
-        for proc_name in p.processors:
-            c = config.processors[proc_name]
-            if c.kind == "batch" and c.options.get("send_batch_max_size"):
-                write_cap = int(c.options["send_batch_max_size"])
-            if c.kind == "batch" and c.options.get("metadata_keys"):
-                md_keys = list(c.options["metadata_keys"])
-                md_limit = int(
-                    c.options.get("metadata_cardinality_limit", 1000)
-                )
-        # per-exporter codec; validate() guaranteed agreement per pipeline
-        compression = None
-        for e in p.exporters:
-            if e in config.exporters:
-                compression = (
-                    config.exporters[e].options.get("compression") or compression
-                )
-        if compression == "none":
-            compression = "uncompressed"
-        # ALL supported receivers are unioned (the batch runner unions its
-        # inputs the same way) — a pipeline with two pages directories
-        # streams both, not just the first. Other receiver kinds
-        # (records_parquet etc.) keep the caller-injected pages_stream
-        # path working as before.
+        plan = compile_pipeline(spark, config, pipeline, out_root)
+        if plan.connectors:
+            raise ConfigError(
+                f"pipeline {pipeline!r}: exporters {plan.connectors} are "
+                "connectors — connector exporters are not supported in the "
+                "streaming runner; use the batch runner or export to a table "
+                "the downstream pipeline reads"
+            )
+        # every pages receiver with a path is unioned, as the batch runner
+        # unions its inputs; without one the caller passes the stream to
+        # start()
         source = None
-        for r in p.receivers:
+        for r in config.pipelines[pipeline].receivers:
             rc = config.receivers.get(r)
-            if (
-                rc is not None
-                and rc.kind in ("pages_parquet", "pages_stream")
-                and rc.options.get("path")
-            ):
-                s = _build_stream_receiver(spark, rc.kind, rc.options)
+            if rc is None or rc.kind not in ("pages_parquet", "pages_stream"):
+                continue
+            if rc.options.get("path"):
+                s = stream_pages(spark, rc.options["path"], rc.options.get("max_files_per_trigger"))
                 source = s if source is None else source.unionByName(s)
-        stages = []
-        parse_engine = "sql"
-        deduper = None
-        compact_every = None
-        for proc_name in p.processors:
-            c = config.processors[proc_name]
-            if c.kind == "parse":
-                # start() parses the stream itself — but honor the
-                # configured engine rather than silently dropping it
-                parse_engine = c.options.get("engine", "sql")
-                continue
-            if c.kind in ("dedup", "dedup_minhash"):
-                # epoch-aware cross-micro-batch dedup: snapshot state
-                # lives next to the sinks unless the config points it
-                # elsewhere; dedups the PARSED record stream on content
-                # (body) with the url as the first-occurrence tiebreak.
-                # Execution hoists dedup ahead of the transform chain, so
-                # a config declaring it after another processor would run
-                # in a different order than it reads — reject that rather
-                # than silently reordering (config order IS the contract).
-                if stages:
-                    raise ValueError(
-                        f"pipeline {pipeline!r}: {c.kind!r} processor "
-                        f"{proc_name!r} must be declared before any other "
-                        "(non-parse) processor — dedup always executes "
-                        "first, on the parsed record stream"
-                    )
-                snapshot_dir = c.options.get(
-                    "snapshot_dir", os.path.join(out_root, "_dedup_snapshot")
-                )
-                ce = c.options.get("compact_every")
-                compact_every = int(ce) if ce else None
-                if c.kind == "dedup":
-                    from .dedup import StreamingDeduper
-
-                    # bloom_m_bits opts into the Bloom-gated membership
-                    # path (per-epoch filter slices, OR-accumulated) —
-                    # bit-identical survivors, anti-join input scaled by
-                    # the duplicate rate instead of the batch size
-                    bloom_m = c.options.get("bloom_m_bits")
-                    deduper = StreamingDeduper(
-                        snapshot_dir,
-                        id_col=c.options.get("id_col", "url"),
-                        text_col=c.options.get("text_col", "body"),
-                        bloom_m_bits=int(bloom_m) if bloom_m else None,
-                        bloom_k=int(c.options.get("bloom_k", 5)),
-                    )
-                else:  # dedup_minhash: NEAR-dup filter, signature snapshot
-                    from .dedup import StreamingNearDeduper
-
-                    deduper = StreamingNearDeduper(
-                        snapshot_dir,
-                        id_col=c.options.get("id_col", "url"),
-                        text_col=c.options.get("text_col", "body"),
-                        num_hashes=int(c.options.get("num_hashes", 16)),
-                        bands=int(c.options.get("bands", 8)),
-                        threshold=float(c.options.get("threshold", 0.8)),
-                    )
-                continue
-            stages.append(_build_processor(spark, c.kind, c.options))
-
-        def transform(df: DataFrame) -> DataFrame:
-            for s in stages:
-                df = s(df)
-            return df
-
-        routes: list[Route] = []
-        for e in p.exporters:
-            if e not in config.exporters:
-                # validate() permits a connector in the exporter slot
-                # (the batch runner handles it); the streaming runner
-                # does not — say so instead of a raw KeyError
-                from ..plans.config import ConfigError
-
-                raise ConfigError(
-                    f"pipeline {pipeline!r}: exporter {e!r} is a "
-                    "connector — connector exporters are not supported "
-                    "in the streaming runner; use the batch runner or "
-                    "export to a table the downstream pipeline reads"
-                )
-            c = config.exporters[e]
-            if c.options.get("all"):
-                routes.append(Route(e, kind="all"))
-            elif c.options.get("default"):
-                routes.append(Route(e, kind="default"))
-            elif "predicate" in c.options:
-                routes.append(Route(e, predicate=c.options["predicate"]))
-            else:
-                routes.append(Route(e, kind="all"))
         return cls(
-            routes=routes,
+            routes=plan.router.routes,
             out_root=out_root,
-            transform=transform if stages else None,
             lineage_dir=lineage_dir,
+            plan=plan,
             source=source,
-            max_records_per_file=write_cap,
-            partition_keys=md_keys or None,
-            metadata_cardinality_limit=md_limit,
-            compression=compression,
-            parse_engine=parse_engine,
-            deduper=deduper,
-            dedup_compact_every=compact_every,
         )
 
     def sink_counts(self) -> dict[str, int]:
@@ -405,12 +230,7 @@ def watch_and_run(
     import threading
     import time
 
-    from ..plans.config import (
-        ConfigError,
-        ConfigWatcher,
-        config_from_resolved,
-        load_config,
-    )
+    from ..plans.config import ConfigWatcher, config_from_resolved, load_config
 
     if stop_event is None:
         stop_event = threading.Event()

@@ -43,22 +43,31 @@ class StageCounters:
 class PipelineTelemetry:
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
     stages: dict[str, StageCounters] = field(default_factory=dict)
-    _observations: dict[str, Observation] = field(default_factory=dict)
+    # stage -> (pending observation, the stage whose items are its input)
+    _observations: dict[str, tuple[Observation, str | None]] = field(
+        default_factory=dict
+    )
 
     def counters(self, stage: str) -> StageCounters:
         return self.stages.setdefault(stage, StageCounters())
 
     def observe(
-        self, df: DataFrame, stage: str, bytes_col: str | None = None
+        self,
+        df: DataFrame,
+        stage: str,
+        bytes_col: str | None = None,
+        upstream: str | None = None,
     ) -> DataFrame:
         """Attach a count observation at a stage boundary; harvested by
         ``harvest()`` after the terminal action runs. Free — rides the job.
 
         ``bytes_col`` additionally sums that column's byte length into the
         stage's ``bytes`` counter (detailed-level size metrics; the same
-        single observation, still zero extra passes)."""
+        single observation, still zero extra passes). ``upstream`` names
+        the stage whose items, in the same unit, are this stage's input:
+        harvest counts the difference as this stage's dropped items."""
         obs = Observation(f"{self.run_id}-{stage}")
-        self._observations[stage] = obs
+        self._observations[stage] = (obs, upstream)
         aggs = [F.count(F.lit(1)).alias("items")]
         if bytes_col is not None:
             aggs.append(
@@ -79,7 +88,7 @@ class PipelineTelemetry:
         requests never enter the pipeline and are never retried
         (extension/auth/server.go:32-38). Rides the job like observe()."""
         obs = Observation(f"{self.run_id}-{stage}")
-        self._observations[stage] = obs
+        self._observations[stage] = (obs, None)
         df = df.observe(
             obs,
             F.count(F.lit(1)).alias("items"),
@@ -90,36 +99,40 @@ class PipelineTelemetry:
         return df.where(F.col(ok_col))
 
     def harvest(self) -> None:
-        """Collect observed counts. Uses the JVM Observation's non-blocking
-        ``getRowOrEmpty`` (bounded ~100ms wait) rather than ``Observation.get``,
-        which blocks FOREVER when the observed frame's action never ran — e.g.
-        a connector-only pipeline whose frame is consumed downstream, or a
-        pipeline the runner skipped. Unmaterialized stages keep their counters
-        at 0 instead of hanging the harvest."""
-        for stage, obs in list(self._observations.items()):
-            try:
-                jo = obs._jo
-                if jo is None:
-                    continue  # observe() never attached — no action possible
-                opt = jo.getRowOrEmpty()
-                if opt.isEmpty():
-                    continue  # stage's action never ran
-                row = opt.get()
-                items = int(row.get(row.fieldIndex("items")))
-                refused = 0
-                try:
-                    refused = int(row.get(row.fieldIndex("refused")))
-                except Exception:
-                    pass  # plain observe() — no refused field
-                c = self.counters(stage)
-                c.accepted = items - refused
-                c.refused = refused
-                try:
-                    c.bytes = int(row.get(row.fieldIndex("bytes")))
-                except Exception:
-                    pass  # no bytes field — level below detailed
-            except Exception:
-                pass  # observation never materialized (stage not executed)
+        """Add every observation whose action has run into its stage's
+        counters, then drop it: per-epoch harvests sum, and harvesting
+        again adds nothing. Uses the JVM Observation's non-blocking
+        ``getRowOrEmpty`` (bounded ~100ms wait) rather than
+        ``Observation.get``, which blocks FOREVER when the observed frame's
+        action never ran — e.g. a connector-only pipeline whose frame is
+        consumed downstream, or a pipeline the runner skipped. Such an
+        observation stays pending, and its stage has no counters until it
+        is harvested: absent, never a made-up 0.
+
+        Dropped = input − output for each stage observed with an
+        ``upstream`` harvested in the same call (parse changes the unit
+        from pages to records, so it has no upstream)."""
+        harvested: dict[str, tuple[int, str | None]] = {}
+        for stage, (obs, upstream) in list(self._observations.items()):
+            opt = obs._jo.getRowOrEmpty()
+            if opt.isEmpty():
+                continue
+            del self._observations[stage]
+            row = opt.get()
+            fields = set(row.schema().fieldNames())
+            items = int(row.get(row.fieldIndex("items")))
+            refused = (
+                int(row.get(row.fieldIndex("refused"))) if "refused" in fields else 0
+            )
+            c = self.counters(stage)
+            c.accepted += items - refused
+            c.refused += refused
+            if "bytes" in fields:
+                c.bytes += int(row.get(row.fieldIndex("bytes")))
+            harvested[stage] = (items, upstream)
+        for stage, (items, upstream) in harvested.items():
+            if upstream in harvested:
+                self.counters(stage).dropped += max(harvested[upstream][0] - items, 0)
 
     def record_sent(self, sink: str, n: int) -> None:
         self.counters(f"exporter/{sink}").sent += n

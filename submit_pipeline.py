@@ -26,7 +26,13 @@ def main() -> None:
     ap.add_argument("out_root", nargs="?", default=None)
     ap.add_argument("--streaming", action="store_true", help="run as a file stream")
     ap.add_argument("--repartition", type=int, default=0, help="url-hash repartition width")
-    ap.add_argument("--parse-engine", default="sql", choices=["sql", "arrow"])
+    ap.add_argument(
+        "--parse-engine",
+        default="sql",
+        choices=["sql", "arrow"],
+        help="parse engine of the built-in demo pipeline (no --config); with "
+        "--config the parse processor's engine option decides, in both modes",
+    )
     ap.add_argument(
         "--config",
         action="append",
@@ -106,10 +112,7 @@ def main() -> None:
         # config-driven mode: the YAML IS the pipeline (T1); the pages
         # path is injected as the receiver unless the config names one
         from opentelemetry_collector_spark.plans import BatchPipelineRunner, load_config
-        from opentelemetry_collector_spark.streaming.stream import (
-            StreamingPipeline,
-            stream_pages,
-        )
+        from opentelemetry_collector_spark.streaming.stream import StreamingPipeline
 
         cfg = load_config(list(args.config))
         for rc in cfg.receivers.values():
@@ -127,7 +130,6 @@ def main() -> None:
                 checkpoint_dir=f"{args.out_root}/_checkpoint",
                 available_now=args.trigger is None,
                 processing_time=args.trigger,
-                parse_engine=args.parse_engine,
             )
             q.awaitTermination()
             print(json.dumps({"sinks": pipe.sink_counts()}))
@@ -165,11 +167,18 @@ def main() -> None:
         return enrich_lang_family(records, lkp_lang(spark))
 
     if args.streaming:
-        pipe = StreamingPipeline(routes=routes, out_root=args.out_root, transform=transform)
+        from opentelemetry_collector_spark.operators.parse import pages_parser
+        from opentelemetry_collector_spark.plans.compiler import PipelinePlan, PlanStage
+
+        stages = [
+            PlanStage("parse", "parse", {}, fn=pages_parser(args.parse_engine)),
+            PlanStage("enrich", "enrich", {}, fn=transform),
+        ]
+        plan = PipelinePlan("demo", stages, FanoutRouter(routes))
+        pipe = StreamingPipeline(routes, args.out_root, plan=plan)
         q = pipe.start(
             stream_pages(spark, args.pages_path),
             checkpoint_dir=f"{args.out_root}/_checkpoint",
-            parse_engine=args.parse_engine,
         )
         q.awaitTermination()
         print(json.dumps({"sinks": pipe.sink_counts()}))

@@ -352,3 +352,40 @@ def test_assign_cells_contract_edges(spark):
         assign_cells(df, [[0.0, 0.0], [1.0]])
     with pytest.raises(ValueError, match="caps at"):
         assign_cells(df, [[0.0, 0.0]] * 2000)
+
+
+def test_assign_cells_drops_vectors_with_null_elements(spark):
+    """A vector holding a NULL element is dropped like a NULL vector: it
+    must not form a ``cell = NULL`` quota group, and the DuckDB twin of
+    the sampling suite applies the same filter."""
+    import duckdb
+
+    from opentelemetry_collector_spark.operators.similarity import (
+        assign_cells,
+        cluster_balanced_sample,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 1.0]), (2, [None, 1.0]), (3, [4.0, None]), (4, [5.0, 5.0])],
+        "vec_id long, embedding array<float>",
+    )
+    centers = [[0.0, 0.0], [5.0, 5.0]]
+    got = {r["vec_id"]: r["cell"] for r in assign_cells(df, centers).collect()}
+    assert got == {1: 0, 4: 1}
+    sel = cluster_balanced_sample(df, centers, per_cell_k=5).collect()
+    assert sorted(r["vec_id"] for r in sel) == [1, 4]
+
+    import __spark_entry__ as entry
+
+    sql = entry.oracle_sql()["sampling_suite"]
+    start = sql.index("cbsv AS (") + len("cbsv AS (")
+    cbsv = sql[start : sql.index("), cbsk AS (")]
+    con = duckdb.connect()
+    dim = len(entry._CBS_CENTERS[0])
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.execute(
+        "INSERT INTO embeddings VALUES (1, ?), (2, ?), (3, NULL), (4, ?)",
+        [[1.0] * dim, [None] + [1.0] * (dim - 1), [1.0] * (dim - 1)],
+    )
+    kept = sorted(r[0] for r in con.execute(cbsv).fetchall())
+    assert kept == [1]

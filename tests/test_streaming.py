@@ -190,10 +190,10 @@ def test_lineage_replay_is_idempotent(spark, pages_dir, tmp_path):
     pipe = StreamingPipeline(
         routes=_routes(), out_root=str(tmp_path / "sinks"), lineage_dir=lineage_dir
     )
-    records = parse_pages(spark.read.parquet(pages_dir))
-    pipe.process_batch(records, epoch_id=0)
+    pages = spark.read.parquet(pages_dir)  # a micro-batch of the source
+    pipe.process_batch(pages, epoch_id=0)
     first = sorted(map(tuple, read_lineage(spark, lineage_dir).collect()))
-    pipe.process_batch(records, epoch_id=0)  # replay
+    pipe.process_batch(pages, epoch_id=0)  # replay
     second = sorted(map(tuple, read_lineage(spark, lineage_dir).collect()))
     assert first == second
     assert first  # non-empty
@@ -393,7 +393,7 @@ service:
 """
     out = str(tmp_path / "sinks")
     pipe = StreamingPipeline.from_config(spark, load_config(cfg), "logs", out)
-    assert pipe.max_records_per_file == 20
+    assert pipe.plan.write_options["max_records_per_file"] == 20
     q = pipe.start(checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     files = glob.glob(f"{out}/audit/data/epoch=*/part-*.parquet")
@@ -405,7 +405,7 @@ service:
 def test_from_config_unions_all_receivers_and_honors_engine(spark, pages_dir, tmp_path):
     """from_config must union EVERY supported receiver (not just the
     first — the batch runner unions its inputs) and carry the parse
-    processor's engine option into start() instead of silently dropping
+    processor's engine option into the plan instead of silently dropping
     it."""
     from opentelemetry_collector_spark.plans.config import load_config
 
@@ -425,7 +425,7 @@ service:
 """
     out = str(tmp_path / "sinks")
     pipe = StreamingPipeline.from_config(spark, load_config(cfg), "logs", out)
-    assert pipe.parse_engine == "arrow"
+    assert pipe.plan.stages[0].options["engine"] == "arrow"
     assert pipe.source is not None
     q = pipe.start(checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
@@ -501,7 +501,7 @@ service:
 """
     out = str(tmp_path / "sinks")
     pipe = StreamingPipeline.from_config(spark, load_config(cfg), "logs", out)
-    assert pipe.deduper is not None
+    assert pipe.plan.stages[1].deduper is not None
     q = pipe.start(checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(180)
     assert len(pipe.epochs_seen) >= 2  # the dup file really was a 2nd batch
@@ -513,9 +513,8 @@ service:
 
 
 def test_config_dedup_after_other_processor_is_rejected(spark, tmp_path):
-    """Execution hoists `dedup` ahead of the transform chain; a config
-    declaring it AFTER another processor would read in one order and run
-    in another — from_config must reject it, not silently reorder."""
+    """`dedup` state is keyed on the records as parsed; a config declaring
+    it AFTER another (non-parse) processor is rejected at compile time."""
     from opentelemetry_collector_spark.plans.config import load_config
 
     cfg = f"""
@@ -550,7 +549,7 @@ service:
     pipe = StreamingPipeline.from_config(
         spark, load_config(ok), "logs", str(tmp_path / "sinks")
     )
-    assert pipe.deduper is not None
+    assert pipe.plan.stages[1].deduper is not None
 
 
 def test_streaming_near_deduper_catches_edits_and_replays(spark, tmp_path):
@@ -670,7 +669,8 @@ service:
 """
     out = str(tmp_path / "sinks")
     pipe = StreamingPipeline.from_config(spark, load_config(cfg), "logs", out)
-    assert pipe.deduper is not None and pipe.deduper.bloom_m_bits == 4096
+    dd = pipe.plan.stages[1].deduper
+    assert dd is not None and dd.bloom_m_bits == 4096
     q = pipe.start(checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(180)
     assert len(pipe.epochs_seen) >= 2
@@ -678,9 +678,7 @@ service:
         spark.createDataFrame(generate_pages_pandas(ids), PAGES_SCHEMA)
     ).count()
     assert pipe.sink_counts()["audit"] == once
-    assert pipe.deduper.bloom_sink.committed_epochs() == sorted(
-        pipe.deduper.sink.committed_epochs()
-    )
+    assert dd.bloom_sink.committed_epochs() == sorted(dd.sink.committed_epochs())
 
 
 def test_dedupe_batch_rows_bloom_gated_matches_plain(spark, tmp_path):
@@ -819,7 +817,7 @@ service:
 """
     out = str(tmp_path / "sinks")
     pipe = StreamingPipeline.from_config(spark, load_config(cfg), "logs", out)
-    assert pipe.dedup_compact_every == 2
+    assert pipe.plan.stages[1].compact_every == 2
     q = pipe.start(checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(240)
     assert len(pipe.epochs_seen) >= 4
@@ -829,7 +827,7 @@ service:
     assert pipe.sink_counts()["audit"] == once
     from opentelemetry_collector_spark.streaming.dedup import _latest_compaction
 
-    dd = pipe.deduper
+    dd = pipe.plan.stages[1].deduper
     comp = _latest_compaction(dd.sink)
     assert comp is not None  # at least one compaction ran mid-stream
     # the snapshot now reads as: one artifact + the epochs above it
@@ -1034,7 +1032,7 @@ service:
     pipe = StreamingPipeline.from_config(
         spark, load_config(cfg), "logs", str(tmp_path / "sinks")
     )
-    assert pipe.metadata_cardinality_limit == 3
+    assert pipe.plan.cardinality_limit == 3
     q = pipe.start(checkpoint_dir=str(tmp_path / "ckpt"))
     # the limit breach surfaces as the stream's terminal exception
     with pytest.raises(Exception, match="metadata_cardinality_limit"):
