@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -57,6 +57,19 @@ def batch_repartition(
     return apply
 
 
+def one_partition_window(*order_cols: Column | str) -> WindowSpec:
+    """Window over a frame that sits on ONE partition: a post-limit top-k,
+    or a bounded frame moved there with ``repartition(1)``.
+
+    It is partitioned by the partition id, constant on such a frame. A
+    literal key would mean the same, but Catalyst drops foldable window
+    partition keys (EliminateWindowPartitions), and an empty partition
+    spec makes Spark log "No Partition Defined for Window operation" — a
+    false alarm when the frame's size is bounded.
+    """
+    return Window.partitionBy(F.spark_partition_id()).orderBy(*order_cols)
+
+
 def split_head(df: DataFrame, n: int, order_by: list[str] = ("url", "line_no")) -> tuple[DataFrame, DataFrame]:
     """P2-P4: deterministically carve exactly ``n`` records (head, rest).
 
@@ -79,8 +92,14 @@ def split_head(df: DataFrame, n: int, order_by: list[str] = ("url", "line_no")) 
         .where(F.col("__prn") <= n)
         .drop("__prn")
     )
-    w = Window.orderBy(*cols)
-    head = cand.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= n).drop("__rn")
+    # ≤ partitions × n candidate rows on one partition
+    w = one_partition_window(*cols)
+    head = (
+        cand.repartition(1)
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= n)
+        .drop("__rn")
+    )
     # null-safe equality: a NULL-keyed row chosen into head must still be
     # excluded from rest (plain anti-join conditions never match NULLs,
     # breaking the head/rest partition invariant — ADVICE r2)

@@ -36,8 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from .batch import one_partition_window
 from .dedup import md5_long, tokenize
 
 TWO60 = float(1 << 60)
@@ -202,5 +202,5 @@ def dsir_resample(
     )
     # row_number over the ≤k survivors only (post-limit) — a single-task
     # window over k rows, not over the corpus
-    w = F.row_number().over(Window.orderBy(F.desc("gumbel_key"), F.col(id_col)))
+    w = F.row_number().over(one_partition_window(F.desc("gumbel_key"), F.col(id_col)))
     return ranked.select(id_col, weight_col, "gumbel_key", w.alias("rank"))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..pins import pin
+from .batch import one_partition_window
 from .dedup import md5_long, tokenize
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, or single non-space marks
@@ -1178,7 +1179,8 @@ def bm25_topk(
         .orderBy(F.col("__s9").desc(), F.col(id_col).asc())
         .limit(k)
     )
-    w = Window.orderBy(F.col("__s9").desc(), F.col(id_col).asc())
+    # ≤ k rows after the limit
+    w = one_partition_window(F.col("__s9").desc(), F.col(id_col).asc())
     return scored.select(
         F.col(id_col),
         F.round(F.col("__s9"), 4).alias("score"),
@@ -1985,8 +1987,8 @@ def pack_sequences(
     totals = t.groupBy("__pid").agg(F.max("__local_cum").alias("__tot"))
     # offsets: totals of all EARLIER partitions — a window over ≤
     # `partitions` rows, never the data
-    ow = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.withColumn(
+    ow = one_partition_window("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    offs = totals.repartition(1).withColumn(
         "__off", F.coalesce(F.sum("__tot").over(ow), F.lit(0).cast("long"))
     ).select("__pid", "__off")
     start = F.col("__off") + F.col("__local_cum") - F.col("n_tokens")

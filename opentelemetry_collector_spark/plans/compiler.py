@@ -649,13 +649,4 @@ class BatchPipelineRunner:
         return result
 
     def read_sink(self, pipeline: str, sink_name: str) -> DataFrame:
-        sink = self._epoch_sinks[pipeline]
-        epochs = sink.committed_epochs()
-        if not epochs:
-            # same guard as FanoutRouter.read_sink — a zero-path parquet
-            # read fails with an opaque schema-inference error instead
-            raise FileNotFoundError(f"no committed epochs under {sink.root}")
-        df = self.spark.read.option("basePath", sink.data_dir).parquet(
-            *[f"{sink.data_dir}/epoch={e}" for e in epochs]
-        )
-        return df.where(F.col("sink") == sink_name).drop("sink", "epoch")
+        return FanoutRouter.read_sink(self.spark, self._epoch_sinks[pipeline], sink_name)

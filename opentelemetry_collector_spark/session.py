@@ -64,8 +64,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to local[$SPARK_GRAFT_CPUS] (env, default all cores)
-    so the scaling bench can pin parallelism via one knob.
+    ``master`` defaults to local[$SPARK_GRAFT_CPUS] (env, default all cores).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -85,13 +84,6 @@ def get_spark(
                 f"-XX:+UseParallelGC -XX:ParallelGCThreads={max(int(inner), 2)} "
                 + _JVM_LONGRUN_OPTS
             )
-    # scaling-bench knob: split size chosen per parallelism level so both
-    # levels see the same number of WAVES (a fixed 16m split count
-    # quantizes the last wave — 21 splits on 8 cores idles 3/24 slots,
-    # which reads as engine inefficiency but is pure scheduling remainder)
-    mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if mpb:
-        conf["spark.sql.files.maxPartitionBytes"] = mpb
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -75,21 +75,9 @@ class FanoutRouter:
             raise ValueError(f"duplicate route names: {names}")
 
     def assign(self, records: DataFrame) -> DataFrame:
-        """Add the ``__sinks: array<string>`` membership column (one pass)."""
-        preds = [r for r in self.routes if r.kind == "predicate"]
-        matched = [F.coalesce(r.condition(), F.lit(False)) for r in preds]
-        any_matched = F.lit(False)
-        for m in matched:
-            any_matched = any_matched | m
-
-        entries = []
-        for r, m in zip(preds, matched):
-            entries.append(F.when(m, F.lit(r.name)))
-        for r in self.routes:
-            if r.kind == "default":
-                entries.append(F.when(~any_matched, F.lit(r.name)))
-            elif r.kind == "all":
-                entries.append(F.lit(r.name))
+        """Add the ``__sinks: array<string>`` membership column (one pass),
+        one entry per route in :meth:`membership` order."""
+        entries = [F.when(m, F.lit(name)) for name, m in self.membership(records).items()]
         sinks = F.array_compact(F.array(*entries)) if entries else F.array().cast("array<string>")
         return records.withColumn(SINKS_COL, sinks)
 
@@ -217,7 +205,10 @@ class FanoutRouter:
         )
         return n
 
-    def read_sink(self, spark: SparkSession, sink: IdempotentParquetSink, name: str) -> DataFrame:
+    @staticmethod
+    def read_sink(spark: SparkSession, sink: IdempotentParquetSink, name: str) -> DataFrame:
+        """Rows of route ``name`` over every committed epoch of a
+        :meth:`write_partitioned` sink."""
         epochs = sink.committed_epochs()
         if not epochs:
             raise FileNotFoundError(f"no committed epochs under {sink.root}")

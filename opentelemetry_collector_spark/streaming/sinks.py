@@ -154,10 +154,6 @@ class IdempotentParquetSink:
             json.dump(meta, f)
         os.rename(tmp, self._marker(epoch_id))
 
-    def write_batch(self, df: DataFrame) -> int:
-        """One-shot batch write (epoch 0)."""
-        return self.write_epoch(df, 0)
-
     def read_committed(self, spark) -> DataFrame:
         epochs = self.committed_epochs()
         if not epochs:
@@ -168,9 +164,7 @@ class IdempotentParquetSink:
         return spark.read.parquet(*paths)
 
     def committed_row_count(self) -> int:
-        return sum(
-            json.load(open(self._marker(e)))["rows"] for e in self.committed_epochs()
-        )
+        return sum(self.epoch_meta(e)["rows"] for e in self.committed_epochs())
 
     def epoch_meta(self, epoch_id: int) -> dict:
         """Commit-marker metadata for one epoch (rows, per_sink counts, ts)."""

@@ -300,3 +300,43 @@ def test_metadata_keys_stage_is_one_exchange(spark, pages):
     )
     assert n_exchanges == 1, plan
     assert "severity_text" in plan
+
+
+def _unpartitioned_windows(df) -> list[str]:
+    """Window operators in ``df``'s executed plan with an empty partition
+    spec — the ones Spark logs "No Partition Defined" for."""
+    found = []
+
+    def walk(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            found.append(node.toString())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def test_bounded_windows_declare_a_partition(spark):
+    """The four windows over bounded input (a post-limit top-k, one row per
+    partition, a per-partition candidate set) name a partition key, so a
+    run's log carries no false "No Partition Defined" warning."""
+    from opentelemetry_collector_spark.operators.batch import split_head
+    from opentelemetry_collector_spark.operators.dsir import dsir_resample
+    from opentelemetry_collector_spark.operators.textstats import bm25_topk, pack_sequences
+
+    docs = spark.createDataFrame(
+        [(i, f"spark window join doc {i}") for i in range(50)], "doc_id long, text string"
+    ).repartition(4)
+    frames = {
+        "split_head": split_head(docs, 5, order_by=["doc_id"])[0],
+        "dsir_resample": dsir_resample(docs.withColumn("log_w", F.lit(0.0)), k=5),
+        "bm25_topk": bm25_topk(docs, ["spark", "join"], k=5),
+        "pack_sequences": pack_sequences(docs, budget=16, partitions=4),
+    }
+    for name, df in frames.items():
+        assert not _unpartitioned_windows(df), name
+        assert df.count() > 0, name
