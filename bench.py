@@ -320,6 +320,22 @@ def run_scaling(pair: tuple[int, int], pages_path: str, n_pages: int) -> dict:
     return scaling
 
 
+def stop_jvm(spark) -> None:
+    """Stop the session and its py4j gateway JVM, and wait for the JVM to
+    exit. ``spark.stop()`` alone ends the SparkContext but leaves the idle
+    gateway JVM holding its heap beside the scaling children; the next
+    ``get_spark`` launches a fresh one."""
+    from pyspark import SparkContext
+
+    spark.stop()
+    gateway = SparkContext._gateway
+    gateway.shutdown()
+    # the gateway JVM exits when its stdin closes (pyspark's java_gateway)
+    gateway.proc.stdin.close()
+    gateway.proc.wait(timeout=120)
+    SparkContext._gateway = SparkContext._jvm = None
+
+
 def main() -> None:
     if sys.argv[1:2] == ["--pipeline-only"]:
         print(json.dumps(pipeline_child(int(sys.argv[2]), sys.argv[3])))
@@ -355,7 +371,7 @@ def main() -> None:
             result["scaling"] = None
             result["scaling_skipped"] = f"{usable_cores()} usable cores: N = cores // 4 < 1"
         else:
-            spark.stop()  # free the cores before the pinned children run
+            stop_jvm(spark)  # free the cores and memory before the pinned children run
             result["scaling"] = run_scaling(pair, pages_path, n_pages)
             spark = get_spark("bench")
 

@@ -408,15 +408,15 @@ def run_epoch(
     plan: PipelinePlan,
     frame: DataFrame,
     epoch_id: int,
-    write: Callable[[DataFrame, int], dict[str, int]],
+    sink: IdempotentParquetSink,
     telemetry: PipelineTelemetry,
     lineage_dir: str | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Run one epoch of ``plan`` over ``frame``: observe each stage
     boundary, apply the stages, assign routes, then — over the persisted
-    routed frame — enforce ``metadata_cardinality_limit``, ``write`` it,
-    record exporter ``sent`` and write lineage. ``write(assigned,
-    epoch_id)`` commits the epoch and returns each sink's committed rows.
+    routed frame — enforce ``metadata_cardinality_limit``, commit every
+    route in one ``write_partitioned`` to ``sink``, record exporter
+    ``sent`` and write lineage.
 
     Returns the processed frame (before routing; connector exporters read
     it) and the per-sink rows. A connector-only plan writes nothing: its
@@ -477,7 +477,11 @@ def run_epoch(
                     "combinations exceed "
                     f"metadata_cardinality_limit={plan.cardinality_limit}"
                 )
-        sent = write(assigned, epoch_id)
+        plan.router.write_partitioned(assigned, sink, epoch_id=epoch_id, **plan.write_options)
+        # the per-sink counts rode the write into the commit marker — read
+        # the tiny marker json, never re-scan the files just written
+        # (VERDICT r1 #3); a replayed epoch reads its earlier marker
+        sent = sink.epoch_meta(epoch_id)["per_sink"]
         if lineage_dir is not None:
             # epoch-keyed overwrite: a replayed epoch re-lands identical
             # lineage rows instead of duplicating them
@@ -621,19 +625,8 @@ class BatchPipelineRunner:
             sink_root = f"{self.out_root}/{pname}"
             plan = compile_pipeline(self.spark, self.config, pname, sink_root)
             sink = IdempotentParquetSink(sink_root, name=pname)
-
-            def write(assigned: DataFrame, epoch: int, plan=plan, sink=sink) -> dict:
-                # one partitioned write for every route; the per-sink
-                # counts ride the write into the commit marker — read
-                # the tiny marker json, never re-scan the files just
-                # written (VERDICT r1 #3)
-                plan.router.write_partitioned(
-                    assigned, sink, epoch_id=epoch, **plan.write_options
-                )
-                return sink.epoch_meta(epoch)["per_sink"]
-
             df, sent = run_epoch(
-                plan, df, epoch_id, write, self.telemetry, f"{self.out_root}/_lineage"
+                plan, df, epoch_id, sink, self.telemetry, f"{self.out_root}/_lineage"
             )
             for e in plan.connectors:
                 self._connector_frames.setdefault(e, []).append(

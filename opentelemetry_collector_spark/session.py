@@ -57,6 +57,27 @@ DEFAULT_CONF = {
 }
 
 
+def session_conf(master: str, extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """The session conf for ``master``: ``DEFAULT_CONF``, sized to a
+    ``local[N]`` master, then ``extra_conf``."""
+    conf = dict(DEFAULT_CONF)
+    if master.startswith("local["):
+        inner = master[len("local[") : -1]
+        if inner.isdigit():
+            conf["spark.sql.shuffle.partitions"] = inner
+            # pin GC threads to the task parallelism: JVM ergonomics size
+            # ParallelGC by HOST cores (~23 threads on a 32-core host),
+            # which hands a local[2] "cluster" 10x its share of GC
+            # parallelism — free compute that inflates the low-cores
+            # scaling sample. A real N-core executor gets N-core GC.
+            conf["spark.driver.extraJavaOptions"] = (
+                f"-XX:+UseParallelGC -XX:ParallelGCThreads={int(inner)} " + _JVM_LONGRUN_OPTS
+            )
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
+
+
 def get_spark(
     app_name: str = "otel-collector-spark",
     master: str | None = None,
@@ -70,22 +91,6 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(DEFAULT_CONF)
-    if master.startswith("local["):
-        inner = master[len("local[") : -1]
-        if inner.isdigit():
-            conf["spark.sql.shuffle.partitions"] = inner
-            # pin GC threads to the task parallelism: JVM ergonomics size
-            # ParallelGC by HOST cores (~23 threads on this 32-core box),
-            # which hands a local[2] "cluster" 10× its share of GC
-            # parallelism — free compute that inflates the low-cores
-            # scaling sample. A real N-core executor gets N-core GC.
-            conf["spark.driver.extraJavaOptions"] = (
-                f"-XX:+UseParallelGC -XX:ParallelGCThreads={max(int(inner), 2)} "
-                + _JVM_LONGRUN_OPTS
-            )
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in session_conf(master, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -70,14 +70,17 @@ class IdempotentParquetSink:
 
     Layout::
 
-        <root>/data/epoch=<id>/part-*.parquet
+        <root>/data/epoch=<id>/[<key>=<v>/...]part-*.parquet
         <root>/_commits/<id>.json      (commit marker, written last)
 
     ``write_epoch`` is safe to call again with the same epoch_id after a
     crash: a marked epoch is skipped; an unmarked partial epoch is
     overwritten in place before the marker lands. Readers consult only
-    marked epochs via ``read_committed`` — the two-step gives the same
-    observable atomicity as an Iceberg snapshot commit.
+    marked epochs — the two-step gives the same observable atomicity as an
+    Iceberg snapshot commit. A fan-out write
+    (``FanoutRouter.write_partitioned``) puts every route of an epoch under
+    ``epoch=<id>/sink=<route>`` and its per-route rows in the one marker
+    (``per_sink``), so all routes of an epoch commit together.
     """
 
     def __init__(self, root: str, name: str = "sink"):
@@ -103,25 +106,37 @@ class IdempotentParquetSink:
         self,
         df: DataFrame,
         epoch_id: int,
-        extra_meta: dict | None = None,
         max_records_per_file: int | None = None,
         partition_keys: list | None = None,
         compression: str | None = None,
+        routes: list[str] | None = None,
     ) -> int:
         """Idempotently write one epoch; returns rows written (0 if skipped).
 
         The row count rides the write via ``observe()`` — one scan of the
-        frame, no post-write re-read of the files just written.
-        ``max_records_per_file`` is the per-WRITE output-batch cap
-        (send_batch_max_size analog) — never session conf.
+        frame, no post-write re-read of the files just written. ``routes``
+        names values of the frame's ``sink`` column: their row counts ride
+        the same observation into the marker as ``per_sink`` (0 for a
+        route that matched nothing). ``partition_keys`` →
+        ``partitionBy(*keys)``; ``max_records_per_file`` is the per-WRITE
+        output-batch cap (send_batch_max_size analog) and ``compression``
+        the per-WRITE codec — never session conf, which would leak across
+        pipelines sharing the session.
         """
         if self.is_committed(epoch_id):
             return 0
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
+        routes = list(routes or [])
         obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        per_sink = [
+            F.coalesce(F.sum(F.when(F.col("sink") == r, 1).otherwise(0)), F.lit(0)).alias(
+                f"__sink{i}"
+            )
+            for i, r in enumerate(routes)
+        ]
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"), *per_sink)
         epoch_dir = os.path.join(self.data_dir, f"epoch={epoch_id}")
         # overwrite-in-place = replay-safe (persistent_storage.go:283-349
         # re-enqueue analog, minus the at-least-once duplicate risk)
@@ -131,16 +146,15 @@ class IdempotentParquetSink:
             # file ever mixes values of the declared keys
             writer = writer.partitionBy(*partition_keys)
         if compression:
-            # per-WRITE codec (configcompression analog) — never the
-            # session conf, which would leak across pipelines
             writer = writer.option("compression", compression)
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
         writer.parquet(epoch_dir)
-        n = int(obs.get["rows"])
+        metrics = obs.get
+        n = int(metrics["rows"])
         meta = {"epoch": epoch_id, "rows": n, "ts": time.time(), "sink": self.name}
-        if extra_meta:
-            meta.update(extra_meta)
+        if routes:
+            meta["per_sink"] = {r: int(metrics[f"__sink{i}"]) for i, r in enumerate(routes)}
         self.commit(epoch_id, meta)
         return n
 
@@ -153,15 +167,6 @@ class IdempotentParquetSink:
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.rename(tmp, self._marker(epoch_id))
-
-    def read_committed(self, spark) -> DataFrame:
-        epochs = self.committed_epochs()
-        if not epochs:
-            from ..schemas import LOG_RECORDS_SCHEMA
-
-            return spark.createDataFrame([], LOG_RECORDS_SCHEMA)
-        paths = [os.path.join(self.data_dir, f"epoch={e}") for e in epochs]
-        return spark.read.parquet(*paths)
 
     def committed_row_count(self) -> int:
         return sum(self.epoch_meta(e)["rows"] for e in self.committed_epochs())

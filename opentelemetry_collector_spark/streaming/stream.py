@@ -8,12 +8,12 @@ cardinality limit, the write, exporter ``sent``, lineage and per-stage
 counters harvested per epoch. A pages-fed pipeline that declares no
 ``parse`` gets the sql one at compile time, in both modes.
 
-One difference between the modes remains, the sink layout: the batch
-runner writes one partitioned epoch per pipeline (``<pipeline>/data/
-epoch=<id>/sink=<route>``), a stream one epoch per route
-(``<route>/data/epoch=<id>``), each under its own commit markers. Both
-layouts are read by existing tools, so unifying them is a data-format
-change of its own.
+Both modes write the same layout: one ``IdempotentParquetSink`` per
+pipeline, each epoch one ``write_partitioned`` job into ``<sink root>/
+data/epoch=<id>/sink=<route>`` and one commit marker ``_commits/<id>.json``
+whose ``per_sink`` holds every route's rows — all routes of an epoch
+commit together, like one Iceberg snapshot. A stream's sink root is its
+``out_root``; the batch runner's is ``<out_root>/<pipeline>``.
 
 The reference's hot path is a synchronous consumer chain fed by receivers,
 with two async boundaries: the batch processor's channel
@@ -37,7 +37,6 @@ maps those exactly:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from typing import Sequence
 
@@ -47,7 +46,7 @@ from pyspark.sql import functions as F
 from ..plans.compiler import PipelinePlan, compile_pipeline, parse_stage, run_epoch
 from ..plans.config import ConfigError
 from ..schemas import PAGES_SCHEMA
-from .router import SINKS_COL, FanoutRouter, Route
+from .router import FanoutRouter, Route, SinkRoute
 from .sinks import IdempotentParquetSink
 from .telemetry import PipelineTelemetry
 
@@ -68,14 +67,15 @@ def stream_pages(
 
 @dataclass
 class StreamingPipeline:
-    """readStream → ``run_epoch`` per micro-batch → per-route idempotent
-    writes.
+    """readStream → ``run_epoch`` per micro-batch → one idempotent
+    partitioned write per epoch.
 
     One ``foreachBatch`` per micro-batch: the routed frame is computed
-    once, then written to each route's epoch directory keyed by the
-    micro-batch id. A replayed micro-batch (crash between sink commit and
-    checkpoint commit) hits already-committed epochs and is skipped —
-    exactly-once end to end.
+    once and written, every route in one job, to the epoch directory keyed
+    by the micro-batch id under ``out_root``. A replayed micro-batch (crash
+    between sink commit and checkpoint commit) hits an already-committed
+    epoch and is skipped — exactly-once end to end. ``sinks`` maps each
+    route to a read handle (``SinkRoute``) over the one sink.
 
     Built by ``from_config``, or in code from ``routes`` alone: a pages
     stream, the sql parse, those routes.
@@ -94,22 +94,12 @@ class StreamingPipeline:
         if self.plan is None:
             self.plan = PipelinePlan("stream", [parse_stage()], FanoutRouter(list(self.routes)))
         self.telemetry = PipelineTelemetry()
-        self.sinks = {
-            r.name: IdempotentParquetSink(os.path.join(self.out_root, r.name), name=r.name)
-            for r in self.plan.router.routes
-        }
-
-    def _write(self, assigned: DataFrame, epoch_id: int) -> dict[str, int]:
-        for name, sink in self.sinks.items():
-            subset = assigned.where(F.array_contains(F.col(SINKS_COL), name)).drop(SINKS_COL)
-            sink.write_epoch(subset, epoch_id, **self.plan.write_options)
-        return {name: sink.epoch_meta(epoch_id)["rows"] for name, sink in self.sinks.items()}
+        self.sink = IdempotentParquetSink(self.out_root, name=self.plan.name)
+        self.sinks = {r.name: SinkRoute(self.sink, r.name) for r in self.plan.router.routes}
 
     def process_batch(self, records: DataFrame, epoch_id: int) -> None:
         """One micro-batch of the source's rows as one epoch of the plan."""
-        run_epoch(
-            self.plan, records, int(epoch_id), self._write, self.telemetry, self.lineage_dir
-        )
+        run_epoch(self.plan, records, int(epoch_id), self.sink, self.telemetry, self.lineage_dir)
         self.epochs_seen.append(int(epoch_id))
 
     def start(

@@ -5,6 +5,8 @@ for push and pull, service/graph.go:42-223)."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pyspark.sql.functions as F
 
@@ -78,6 +80,11 @@ def _stage_counts(stages: dict) -> dict:
     }
 
 
+def _layout(root) -> set[str]:
+    """The route directories under every epoch of a sink root."""
+    return {p.name for p in root.glob("data/epoch=*/sink=*") if p.is_dir()}
+
+
 def test_batch_and_streaming_agree_on_rows_and_counters(spark, tmp_path):
     pages = str(tmp_path / "pages")
     _write_pages(spark, pages, [(0, 100), (100, 200), (200, 300)])
@@ -105,6 +112,14 @@ def test_batch_and_streaming_agree_on_rows_and_counters(spark, tmp_path):
     assert len(_stage_counts(batch_stages)) == 8  # receiver, 6 stages, output
     for stages, rows in ((batch_stages, batch_rows), (stream_stages, stream_rows)):
         assert {s: stages[f"exporter/{s}"]["sent"] for s in SINKS} == rows
+    # one sink layout: data/epoch=<id>/sink=<route> plus one marker per epoch
+    batch_root, stream_root = tmp_path / "batch" / "logs", tmp_path / "stream"
+    assert _layout(stream_root) == _layout(batch_root) == {f"sink={s}" for s in SINKS}
+    batch_marker = json.loads((batch_root / "_commits" / "0.json").read_text())
+    for e in pipe.epochs_seen:
+        marker = json.loads((stream_root / "_commits" / f"{e}.json").read_text())
+        assert marker.keys() == batch_marker.keys()
+        assert marker["per_sink"].keys() == set(SINKS)
 
 
 def test_batch_runner_runs_a_dedup_processor(spark, tmp_path):

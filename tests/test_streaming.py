@@ -199,6 +199,33 @@ def test_lineage_replay_is_idempotent(spark, pages_dir, tmp_path):
     assert first  # non-empty
 
 
+def test_epoch_is_one_write_job_and_one_marker(spark, pages_dir, tmp_path, monkeypatch):
+    """A micro-batch commits every route in ONE ``write_epoch`` job and ONE
+    commit marker, whose ``per_sink`` equals the routed counts — the batch
+    runner's write, not one filtered write and marker per route."""
+    from opentelemetry_collector_spark.streaming.sinks import IdempotentParquetSink
+
+    calls = []
+    write_epoch = IdempotentParquetSink.write_epoch
+
+    def spy(self, *a, **kw):
+        calls.append(self.root)
+        return write_epoch(self, *a, **kw)
+
+    monkeypatch.setattr(IdempotentParquetSink, "write_epoch", spy)
+    out = str(tmp_path / "sinks")
+    pipe = StreamingPipeline(routes=_routes(), out_root=out)
+    pages = spark.read.parquet(pages_dir)
+    pipe.process_batch(pages, epoch_id=0)
+
+    assert calls == [out]
+    assert os.listdir(os.path.join(out, "_commits")) == ["0.json"]
+    router = pipe.plan.router
+    want = {r["sink"]: r["n"] for r in router.route_counts(router.assign(parse_pages(pages))).collect()}
+    assert pipe.sink.epoch_meta(0)["per_sink"] == want
+    assert {name: h.epoch_meta(0)["rows"] for name, h in pipe.sinks.items()} == want
+
+
 def test_windowed_severity_counts_streaming(spark, pages_dir, tmp_path):
     """Watermarked tumbling window over the record stream; results equal
     the same expression evaluated in batch (append mode emits only
@@ -326,9 +353,10 @@ def test_watch_driven_reload_resumes_from_checkpoint(spark, tmp_path):
 
     # poll sink counts via a fresh reader (the pipeline object lives in
     # the runner thread; sinks are on disk)
+    from opentelemetry_collector_spark.streaming.router import SinkRoute
     from opentelemetry_collector_spark.streaming.sinks import IdempotentParquetSink
 
-    audit_sink = IdempotentParquetSink(str(tmp_path / "sinks" / "audit"), name="audit")
+    audit_sink = SinkRoute(IdempotentParquetSink(str(tmp_path / "sinks"), name="logs"), "audit")
     assert wait_until(lambda: audit_sink.committed_row_count() == expected1), (
         f"gen1 drain: {audit_sink.committed_row_count()} != {expected1}"
     )
@@ -343,7 +371,7 @@ def test_watch_driven_reload_resumes_from_checkpoint(spark, tmp_path):
         1
     ).write.mode("append").parquet(in_dir)
     expected2 = _batch_expected(spark, in_dir)["audit"]
-    errors_sink = IdempotentParquetSink(str(tmp_path / "sinks" / "errors"), name="errors")
+    errors_sink = SinkRoute(IdempotentParquetSink(str(tmp_path / "sinks"), name="logs"), "errors")
     new_errors = (
         parse_pages(spark.createDataFrame(generate_pages_pandas(ids), PAGES_SCHEMA))
         .where(F.col("severity_number") >= 17)
@@ -352,9 +380,8 @@ def test_watch_driven_reload_resumes_from_checkpoint(spark, tmp_path):
     assert wait_until(lambda: audit_sink.committed_row_count() == expected2), (
         "post-reload drain incomplete"
     )
-    # wait for the WHOLE epoch, not just the audit sink: stopping as soon
-    # as audit commits can interrupt the same epoch's errors write
-    # mid-flight (exactly-once then rightly leaves it uncommitted)
+    # the errors route commits in the same epoch markers as audit; wait
+    # for its count too before stopping
     assert wait_until(lambda: errors_sink.committed_row_count() == new_errors), (
         f"errors drain: {errors_sink.committed_row_count()} != {new_errors}"
     )
@@ -396,7 +423,7 @@ service:
     assert pipe.plan.write_options["max_records_per_file"] == 20
     q = pipe.start(checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
-    files = glob.glob(f"{out}/audit/data/epoch=*/part-*.parquet")
+    files = glob.glob(f"{out}/data/epoch=*/sink=audit/part-*.parquet")
     assert files
     assert max(pq.read_metadata(f).num_rows for f in files) <= 20
     assert pipe.sink_counts()["audit"] == _batch_expected(spark, pages_dir)["audit"]
@@ -968,7 +995,7 @@ service:
     q = pipe.start(checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     assert pipe.sink_counts()["audit"] == _batch_expected(spark, pages_dir)["audit"]
-    files = glob.glob(f"{out}/audit/data/epoch=*/severity_text=*/part-*.parquet")
+    files = glob.glob(f"{out}/data/epoch=*/sink=audit/severity_text=*/part-*.parquet")
     assert files, "expected per-key-value partition directories in each epoch"
     f = files[0]
     assert "severity_text" not in pq.read_schema(f).names
