@@ -309,22 +309,13 @@ def _parse_lines_arrow(lines: DataFrame) -> DataFrame:
 
 
 def parse_pages(
-    pages: DataFrame, engine: str | None = None, hot_columns: bool = False
+    pages: DataFrame, engine: str = "sql", hot_columns: bool = False
 ) -> DataFrame:
     """pages → log_records (LOG_RECORDS_SCHEMA). See module docstring.
 
     ``hot_columns=True`` (sql engine) appends promoted typed columns
     (attr_status/attr_method/attr_component) for map-free routing.
-
-    ``engine=None`` consults the ``parse.arrow_engine`` feature gate
-    (plans/featuregate.py — alpha, off by default): callers that don't
-    pin an engine get the all-JVM SQL parser unless the operator enabled
-    the gate via config ``feature_gates: ["+parse.arrow_engine"]``.
     """
-    if engine is None:
-        from ..plans.featuregate import ARROW_PARSE_GATE
-
-        engine = "arrow" if ARROW_PARSE_GATE.is_enabled() else "sql"
     lines = explode_lines(pages)
     if engine == "sql":
         return lines.select(*_sql_record_columns(hot_columns))

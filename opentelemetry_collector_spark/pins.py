@@ -56,17 +56,11 @@ def free(df: DataFrame) -> bool:
 
     Falls back to plain ``unpersist()`` for frames registered here that
     are cached rather than checkpointed."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            plan.rdd().unpersist(False)
-            return True
-    except Exception:
-        pass  # session stopped / non-checkpoint plan — fall through
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getName().endswith("LogicalRDD"):
+        plan.rdd().unpersist(False)
+        return True
+    df.unpersist()
     return False
 
 

@@ -37,6 +37,7 @@ from ..operators.batch import batch_repartition
 from ..operators.enrich import enrich_lang_family, enrich_resource_geo
 from ..operators.ottl import compile_statements
 from ..operators.parse import pages_parser
+from ..schemas import PAGES_SCHEMA
 from ..streaming.router import FanoutRouter, Route
 from ..streaming.sinks import IdempotentParquetSink
 from ..streaming.telemetry import PipelineTelemetry, write_lineage
@@ -49,14 +50,91 @@ Stage = Callable[[DataFrame], DataFrame]
 # component factories (receiver.Factory / processor.Factory analog)
 # --------------------------------------------------------------------------
 
-def _build_receiver(spark: SparkSession, kind: str, opts: dict) -> DataFrame:
-    if kind == "pages_parquet":
-        return spark.read.parquet(opts["path"])
-    if kind == "pages_synthetic":
-        return synthesize_pages(spark, int(opts["n_rows"]), opts.get("partitions"))
-    if kind == "records_parquet":  # pre-parsed log records
-        return spark.read.parquet(opts["path"])
-    raise ConfigError(f"unknown receiver kind {kind!r}")
+# receiver kinds that deliver pages: their pipelines reach records
+# through parse
+_PAGES_RECEIVERS = ("pages_parquet", "pages_synthetic", "pages_stream")
+# receiver kinds a stream reads: a pages parquet directory as a file stream
+_STREAM_RECEIVERS = ("pages_parquet", "pages_stream")
+
+
+def stream_pages(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """File-stream source over a pages parquet directory (S1 streaming)."""
+    reader = spark.readStream.schema(PAGES_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    return reader.parquet(input_dir)
+
+
+def read_receiver(
+    spark: SparkSession,
+    config: CollectorConfig,
+    name: str,
+    telemetry: PipelineTelemetry | None = None,
+    streaming: bool = False,
+) -> DataFrame | None:
+    """The one reader of the receivers section: receiver ``name`` as a
+    frame, read with ``spark.read`` in batch or ``spark.readStream`` when
+    ``streaming`` (S1; graph.go:59-102 builds receivers identically in
+    both modes).
+
+    A stream reads only a pages parquet directory; a pages receiver with
+    no ``path`` returns None, and the caller passes the stream to
+    ``start()``. A receiver kind a stream cannot read, a connector in the
+    receiver slot and an ``auth:`` receiver raise ``ConfigError`` rather
+    than build a stream that silently skips them. In batch an ``auth:``
+    receiver gates its rows and counts the refused ones on ``telemetry``.
+    """
+    c = config.receivers.get(name)
+    if streaming:
+        if c is None:
+            raise ConfigError(
+                f"receiver {name!r} is a connector — connector receivers are "
+                "not supported in the streaming runner; use the batch runner"
+            )
+        if c.kind not in _STREAM_RECEIVERS:
+            raise ConfigError(
+                f"receiver {name!r}: kind {c.kind!r} cannot be streamed — the "
+                f"streaming runner reads {list(_STREAM_RECEIVERS)}"
+            )
+        if c.options.get("auth"):
+            raise ConfigError(
+                f"receiver {name!r}: auth is not supported in the streaming "
+                "runner — a file stream carries no request metadata to "
+                "authenticate; use the batch runner"
+            )
+        if not c.options.get("path"):
+            return None
+        return stream_pages(spark, c.options["path"], c.options.get("max_files_per_trigger"))
+    if c.kind in ("pages_parquet", "records_parquet"):  # records: pre-parsed
+        df = spark.read.parquet(c.options["path"])
+    elif c.kind == "pages_synthetic":
+        df = synthesize_pages(spark, int(c.options["n_rows"]), c.options.get("partitions"))
+    else:
+        raise ConfigError(f"unknown receiver kind {c.kind!r}")
+    auth_name = c.options.get("auth")
+    if not auth_name:
+        return df
+    # server authenticator at the receiver boundary: validated by
+    # config.validate() to name an ENABLED extension
+    # (configauth.GetServerAuthenticator semantics); refused rows are
+    # counted on this receiver's obsreport counter and never enter any
+    # pipeline (extension/auth/server.go:32-38)
+    from ..operators.clientauth import AUTH_OK_COL, build_authenticator
+
+    ext = config.extensions[auth_name]
+    df = build_authenticator(ext.kind, ext.options).authenticate(
+        df, metadata_col=c.options.get("metadata_col", "request_metadata")
+    )
+    if config.telemetry_level == "none":
+        # metering off (configtelemetry LevelNone) — the GATE still
+        # applies; only the counters disappear
+        return df.where(F.col(AUTH_OK_COL)).drop(AUTH_OK_COL)
+    # own namespace: a receiver and a pipeline may share a name, and the
+    # pipeline boundary observes under 'receiver/<pipeline>' — a colliding
+    # key would silently overwrite these refused counters
+    return telemetry.observe_auth(df, f"receiver_auth/{name}", AUTH_OK_COL).drop(AUTH_OK_COL)
 
 
 def _metadata_keys(opts: dict) -> list[str]:
@@ -233,10 +311,6 @@ def _build_processor(spark: SparkSession, kind: str, opts: dict) -> Stage:
 # --------------------------------------------------------------------------
 # the compiled plan: one reading of a pipeline, run by both modes
 # --------------------------------------------------------------------------
-
-# receivers that deliver pages: their pipelines reach records through parse
-_PAGES_RECEIVERS = ("pages_parquet", "pages_synthetic", "pages_stream")
-
 
 @dataclass(frozen=True)
 class PlanStage:
@@ -545,34 +619,7 @@ class BatchPipelineRunner:
                     uses[r] = uses.get(r, 0) + 1
         frames: dict[str, DataFrame] = {}
         for name, n in uses.items():
-            c = self.config.receivers[name]
-            df = _build_receiver(self.spark, c.kind, c.options)
-            auth_name = c.options.get("auth")
-            if auth_name:
-                # server authenticator at the receiver boundary: validated
-                # by config.validate() to name an ENABLED extension
-                # (configauth.GetServerAuthenticator semantics); refused
-                # rows are counted on this receiver's obsreport counter and
-                # never enter any pipeline (extension/auth/server.go:32-38)
-                from ..operators.clientauth import AUTH_OK_COL, build_authenticator
-
-                ext = self.config.extensions[auth_name]
-                authenticator = build_authenticator(ext.kind, ext.options)
-                df = authenticator.authenticate(
-                    df, metadata_col=c.options.get("metadata_col", "request_metadata")
-                )
-                if self.config.telemetry_level == "none":
-                    # metering off (configtelemetry LevelNone) — the GATE
-                    # still applies; only the counters disappear
-                    df = df.where(F.col(AUTH_OK_COL)).drop(AUTH_OK_COL)
-                else:
-                    # own namespace: a receiver and a pipeline may share a
-                    # name, and the pipeline boundary observes under
-                    # 'receiver/<pipeline>' — a colliding key would
-                    # silently overwrite these refused counters
-                    df = self.telemetry.observe_auth(
-                        df, f"receiver_auth/{name}", AUTH_OK_COL
-                    ).drop(AUTH_OK_COL)
+            df = read_receiver(self.spark, self.config, name, self.telemetry)
             if n > 1:
                 # shared receiver read once; persist so each consuming
                 # pipeline's job reuses the materialized scan

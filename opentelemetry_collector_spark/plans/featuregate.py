@@ -140,15 +140,6 @@ def global_registry() -> Registry:
 
 # --- gates this engine actually consults -----------------------------------
 
-# parse engine selection: the Arrow (pandas-batched) parser is the alpha
-# alternative to the default all-JVM SQL parser; operators/parse.py
-# consults this when the caller does not pass an explicit engine
-ARROW_PARSE_GATE = _global_registry.register(
-    "parse.arrow_engine",
-    Stage.ALPHA,
-    description="use the Arrow-batched parser when no engine is specified",
-)
-
 # record-count-bounded export envelopes (send_batch_max_size semantics)
 # are well-tested and on by default; disabling falls back to unbounded
 # per-resource envelopes

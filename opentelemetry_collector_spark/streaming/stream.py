@@ -43,9 +43,15 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.compiler import PipelinePlan, compile_pipeline, parse_stage, run_epoch
+from ..plans.compiler import (
+    PipelinePlan,
+    compile_pipeline,
+    parse_stage,
+    read_receiver,
+    run_epoch,
+    stream_pages,  # noqa: F401 — the file-stream source, importable here
+)
 from ..plans.config import ConfigError
-from ..schemas import PAGES_SCHEMA
 from .router import FanoutRouter, Route, SinkRoute
 from .sinks import IdempotentParquetSink
 from .telemetry import PipelineTelemetry
@@ -53,16 +59,6 @@ from .telemetry import PipelineTelemetry
 # run_epoch (plans/compiler.py) writes the lineage now; the name stays
 # importable here because the benchmark's tracer wraps it in this module
 from .telemetry import write_lineage  # noqa: F401
-
-
-def stream_pages(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-stream source over a pages parquet directory (S1 streaming)."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return reader.parquet(input_dir)
 
 
 @dataclass
@@ -153,7 +149,9 @@ class StreamingPipeline:
         restart; state survives in the checkpoint + idempotent sinks, so
         the rebuilt pipeline resumes exactly-once). The RECEIVER section
         builds the stream source (graph.go:59-102 builds receivers
-        identically in both modes); ``compile_pipeline`` builds the rest.
+        identically in both modes) through ``read_receiver``, which
+        refuses what a stream cannot read; ``compile_pipeline`` builds the
+        rest.
         """
         plan = compile_pipeline(spark, config, pipeline, out_root)
         if plan.connectors:
@@ -163,16 +161,12 @@ class StreamingPipeline:
                 "streaming runner; use the batch runner or export to a table "
                 "the downstream pipeline reads"
             )
-        # every pages receiver with a path is unioned, as the batch runner
-        # unions its inputs; without one the caller passes the stream to
-        # start()
+        # every receiver with a path is unioned, as the batch runner unions
+        # its inputs; without one the caller passes the stream to start()
         source = None
         for r in config.pipelines[pipeline].receivers:
-            rc = config.receivers.get(r)
-            if rc is None or rc.kind not in ("pages_parquet", "pages_stream"):
-                continue
-            if rc.options.get("path"):
-                s = stream_pages(spark, rc.options["path"], rc.options.get("max_files_per_trigger"))
+            s = read_receiver(spark, config, r, streaming=True)
+            if s is not None:
                 source = s if source is None else source.unionByName(s)
         return cls(
             routes=plan.router.routes,

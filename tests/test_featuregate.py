@@ -53,34 +53,39 @@ def test_apply_flags_spec_and_visit_order():
     assert seen == ["a.one", "b.two"]  # lexicographical (registry.go:124-137)
 
 
-def test_config_applies_feature_gates_and_parse_consults_gate(spark):
+def test_config_feature_gate_disables_record_count_envelopes(spark):
+    from opentelemetry_collector_spark.fixtures.pages import synthesize_pages
+    from opentelemetry_collector_spark.functions.otlp_json import logs_to_otlp_json
     from opentelemetry_collector_spark.operators.parse import parse_pages
     from opentelemetry_collector_spark.plans.config import ConfigError, load_config
-    from opentelemetry_collector_spark.plans.featuregate import global_registry
-
-    from opentelemetry_collector_spark.fixtures.pages import synthesize_pages
-
-    pages = synthesize_pages(spark, 50, partitions=2)
-    # the synthetic pages source itself uses one MapInPandas: the arrow
-    # PARSE engine adds one more on top of it
-    base_nodes = pages._jdf.queryExecution().executedPlan().toString().count(
-        "MapInPandas"
+    from opentelemetry_collector_spark.plans.featuregate import (
+        BOUNDED_ENVELOPES_GATE,
+        global_registry,
     )
+
+    records = parse_pages(synthesize_pages(spark, 50, partitions=2))
+
+    def n_envelopes() -> int:
+        return logs_to_otlp_json(records, max_records_per_envelope=2).count()
+
+    n_resources = records.select("resource").distinct().count()
+    assert BOUNDED_ENVELOPES_GATE.is_enabled()  # beta: on by default
+    assert n_envelopes() > n_resources  # split at 2 records per envelope
     cfg_yaml = """
 receivers: {pages: {path: /tmp/x}}
 exporters: {out: {path: /tmp/y}}
 service:
   pipelines:
     logs: {receivers: [pages], exporters: [out]}
-feature_gates: ["+parse.arrow_engine"]
+feature_gates: ["-exporter.record_count_envelopes"]
 """
     try:
         load_config(cfg_yaml)
-        plan = parse_pages(pages)._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == base_nodes + 1  # gate picked arrow
+        assert not BOUNDED_ENVELOPES_GATE.is_enabled()
+        # gate off: one unbounded envelope per resource
+        assert n_envelopes() == n_resources
     finally:
-        global_registry().set("parse.arrow_engine", False)
-    plan = parse_pages(pages)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == base_nodes  # default: all-JVM sql
+        global_registry().set("exporter.record_count_envelopes", True)
+    assert BOUNDED_ENVELOPES_GATE.is_enabled()
     with pytest.raises(ConfigError, match="no such feature gate"):
-        load_config(cfg_yaml.replace("parse.arrow_engine", "bogus.gate"))
+        load_config(cfg_yaml.replace("exporter.record_count_envelopes", "bogus.gate"))

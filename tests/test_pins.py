@@ -90,3 +90,22 @@ def test_pagerank_checkpoint_every_stays_bounded(spark):
     assert _n_persistent(spark) <= base + 1
     pins.release_pins()
     assert _n_persistent(spark) <= base
+
+
+def test_free_reports_checkpoint_vs_cache(spark):
+    # a localCheckpoint frame is freed at its RDD; a cache()d frame falls
+    # through to unpersist, which drops its cache entry, and reports False
+    base = _n_persistent(spark)
+    pinned = spark.range(12).localCheckpoint(eager=True)
+    rdd_id = pinned._jdf.queryExecution().analyzed().rdd().id()
+    assert spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
+    assert pins.free(pinned) is True
+    assert not spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
+    assert _n_persistent(spark) == base
+
+    cached = spark.range(9).select((F.col("id") + 1).alias("id")).cache()
+    assert cached.count() == 9
+    assert _n_persistent(spark) == base + 1
+    assert pins.free(cached) is False
+    assert not cached.is_cached
+    assert _n_persistent(spark) == base

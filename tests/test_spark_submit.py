@@ -4,8 +4,8 @@ The north rule requires the pipeline to run via spark-submit --py-files;
 everything else in the suite drives the library in-process, so this is
 the one test that proves the deployable artifact (dist zip + entry
 script) actually boots a fresh Spark JVM, imports the engine from the
-zip, runs parse→enrich→route, and reports per-sink counts that match an
-in-process ground truth.
+zip, runs a ``--config`` pipeline (parse→enrich→route), and reports
+per-sink counts that match an in-process ground truth.
 """
 
 from __future__ import annotations
@@ -26,6 +26,23 @@ from opentelemetry_collector_spark.schemas import PAGES_SCHEMA
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
+
+# inline YAML for --config: parse → both enrichments → three routes; the
+# pages receiver names no path, so the entry injects pages_path
+SHIP_CONFIG = """
+receivers: {pages: {kind: pages_parquet}}
+processors: {enrich_geo: {}, enrich_lang: {}}
+exporters:
+  errors: {kind: parquet, predicate: "severity_number >= 17"}
+  audit: {kind: parquet, all: true}
+  default: {kind: parquet, default: true}
+service:
+  pipelines:
+    logs:
+      receivers: [pages]
+      processors: [enrich_geo, enrich_lang]
+      exporters: [errors, audit, default]
+"""
 
 
 @pytest.mark.skipif(
@@ -63,6 +80,8 @@ def test_spark_submit_py_files_ships_the_pipeline(spark, tmp_path):
             f"{REPO}/dist/submit_pipeline.py",
             pages_dir,
             out_root,
+            "--config",
+            SHIP_CONFIG,
         ],
         env=env,
         capture_output=True,
@@ -74,14 +93,12 @@ def test_spark_submit_py_files_ships_the_pipeline(spark, tmp_path):
     result = json.loads(
         [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
     )
-    counts = result["route_counts"]
+    counts = result["sinks"]
     assert counts["audit"] == total
     assert counts["errors"] == n_err
     assert counts["default"] == total - n_err
-    # the write confirms the same counts the router predicted
-    assert result["written"] == counts
     # and the per-sink parquet really landed on disk with the right rows
-    got = spark.read.parquet(f"{out_root}/errors/data").count()
+    got = spark.read.parquet(f"{out_root}/logs/data").where("sink = 'errors'").count()
     assert got == n_err
 
 
@@ -119,6 +136,12 @@ def test_validate_subcommand_checks_config_without_spark(tmp_path):
         capture_output=True, text=True, timeout=60,
     )
     assert missing.returncode != 0
+    # and so does a config: there is no built-in pipeline
+    no_config = subprocess.run(
+        [sys.executable, entry, str(tmp_path / "pages"), str(tmp_path / "out")],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert no_config.returncode != 0 and "--config is required" in no_config.stderr
 
 
 def test_components_subcommand_lists_factory_inventory(tmp_path):
@@ -142,7 +165,6 @@ def test_components_subcommand_lists_factory_inventory(tmp_path):
     dispatch_src = ""
     for rel in (
         "opentelemetry_collector_spark/plans/compiler.py",
-        "opentelemetry_collector_spark/streaming/stream.py",
         "opentelemetry_collector_spark/operators/clientauth.py",
     ):
         with open(os.path.join(REPO, rel)) as f:

@@ -1066,34 +1066,46 @@ service:
         q.awaitTermination(120)
 
 
-def test_streaming_rejects_connector_exporter(spark, pages_dir, tmp_path):
-    """config.validate() permits a connector in the exporter slot (the
-    batch runner bridges it); the streaming runner must say so in a
-    ConfigError instead of dying with a raw KeyError."""
-    from opentelemetry_collector_spark.plans.config import ConfigError, load_config
-
-    cfg = f"""
-receivers:
-  pages:
-    kind: pages_parquet
-    path: {pages_dir}
-connectors:
-  fwd:
-    kind: forward
-exporters:
-  audit:
-    kind: parquet
-    all: true
+_FWD = """
+connectors: {fwd: {kind: forward}}
+exporters: {audit: {kind: parquet, all: true}}
 service:
   pipelines:
-    logs:
-      receivers: [pages]
-      exporters: [fwd]
-    logs/out:
-      receivers: [fwd]
-      exporters: [audit]
+    logs: {receivers: [pages], exporters: [fwd]}
+    logs/out: {receivers: [fwd], exporters: [audit]}
 """
-    with pytest.raises(ConfigError, match="connector"):
-        StreamingPipeline.from_config(
-            spark, load_config(cfg), "logs", str(tmp_path / "sinks")
-        )
+_ONE = """
+exporters: {audit: {kind: parquet, all: true}}
+service:
+  extensions: [auth/bearer]
+  pipelines:
+    logs: {receivers: [pages], exporters: [audit]}
+"""
+_BEARER = "extensions: {auth/bearer: {kind: bearertoken, tokens: {t0: alice}}}"
+# case → (pipeline built, receiver options, rest of the config, error match)
+_REFUSED = {
+    # config.validate() permits a connector in the exporter slot (the batch
+    # runner bridges it); the stream must say so instead of a raw KeyError
+    "connector_exporter": ("logs", "kind: pages_parquet", _FWD, "connector"),
+    "connector_receiver": ("logs/out", "kind: pages_parquet", _FWD, "'fwd' is a connector"),
+    "records_receiver": (
+        "logs", "kind: records_parquet", _BEARER + _ONE, "'pages'.*cannot be streamed"
+    ),
+    "auth_receiver": (
+        "logs", "kind: pages_parquet, auth: auth/bearer", _BEARER + _ONE, "'pages'.*auth"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_REFUSED))
+def test_streaming_rejects_what_it_cannot_stream(spark, pages_dir, tmp_path, case):
+    """A receiver or exporter the streaming runner cannot run is a
+    ConfigError at from_config that names it, never a stream that silently
+    skips it (a skipped auth gate would admit every row). Each config
+    passes validate(): the refusal is the streaming runner's own."""
+    from opentelemetry_collector_spark.plans.config import ConfigError, load_config
+
+    pipeline, receiver, rest, match = _REFUSED[case]
+    cfg = load_config(f"receivers: {{pages: {{{receiver}, path: {pages_dir}}}}}\n{rest}")
+    with pytest.raises(ConfigError, match=match):
+        StreamingPipeline.from_config(spark, cfg, pipeline, str(tmp_path / "sinks"))
